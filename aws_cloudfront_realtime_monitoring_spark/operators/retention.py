@@ -97,12 +97,13 @@ def compact_partition(
     and swap the directory (two renames; see the atomicity note below).
     Returns (files_before, files_after).
 
-    A streaming sink writes one file per (micro-batch x task) -- at 1000
-    executors x 10 s triggers that is millions of kB-sized files per day,
-    and every later scan pays per-file open cost (the classic small-file
-    problem). Compaction is the standard maintenance job (Delta OPTIMIZE,
-    Iceberg rewrite_data_files): read the partition once, write it back
-    at the target file size via one round-robin repartition, swap. Rows
+    ``write_partitioned_parquet`` writes one file per (micro-batch x
+    hour partition) -- at a 10 s trigger that is 360 files per hour
+    partition, and every later scan pays per-file open cost (the classic
+    small-file problem). Compaction is the standard maintenance job
+    (Delta OPTIMIZE, Iceberg rewrite_data_files): read the partition
+    once, write it back at the target file size via one round-robin
+    repartition, swap. Rows
     are preserved exactly (pytest-pinned); only the physical file layout
     changes. Run per partition so a failure affects one partition; table
     formats get transactional swaps for free.

@@ -172,17 +172,19 @@ def stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     watermarked = stream.withWatermark("ts", "24 hours")
     duplicated = watermarked.union(watermarked)  # at-least-once delivery
-    # NULL event_ids pass through un-deduped, mirroring the production
-    # dedup_stream rule (r8): dropDuplicates treats NULL keys as equal
-    # and would collapse every id-less row into one survivor while the
-    # oracle counts them all (r13 review; latent -- fixtures carry no
-    # NULL ids). The passthrough leg comes from the PRE-union stream
-    # (r14 advice): routing id-less rows around dedup from BOTH legs of
-    # the replay union emitted them twice while the oracle counts the
-    # table once -- replay duplication of an id-less record is exactly
-    # what the simulated at-least-once layer manufactures, so the
-    # equivalence contract (stream == one-scan batch answer) wants each
-    # source row once however it was delivered.
+    # NULL event_ids pass through un-deduped: dropDuplicates treats NULL
+    # keys as equal and would collapse every id-less row into one
+    # survivor while the oracle counts them all (r13 review; latent --
+    # fixtures carry no NULL ids). The production dedup_stream's
+    # whole-row key for id-less rows would also collapse rows that are
+    # identical in the table, which the oracle counts. The passthrough
+    # leg comes from the PRE-union stream (r14 advice): routing id-less
+    # rows around dedup from BOTH legs of the replay union emitted them
+    # twice while the oracle counts the table once -- replay duplication
+    # of an id-less record is exactly what the simulated at-least-once
+    # layer manufactures, so the equivalence contract (stream ==
+    # one-scan batch answer) wants each source row once however it was
+    # delivered.
     with_id = duplicated.where(F.col("event_id").isNotNull())
     no_id = watermarked.where(F.col("event_id").isNull())
     deduped = (

@@ -345,6 +345,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     # fallback) for this memo and the load_table relation memo alike
     key = _session_key(spark)
     _touch_session(key)
+    # the UTC pin must hold on the memo-HIT path too, as in load_table:
+    # a hit skips every load_table call, so a session whose timezone
+    # changed since the views were registered would otherwise bucket
+    # dates/hours away from the DuckDB oracle's naive-as-UTC reading
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     sig = _source_sig(sf_dir)
     cur = (os.path.normpath(sf_dir), sig)
     if _VIEWS_CURRENT.get(key) == cur:

@@ -16,11 +16,18 @@ Reference parity mapping:
   (lambda_function.py:54-60, 121-126) -> checkpointed ``writeStream`` to
   time-partitioned parquet: exactly-once, strictly stronger; partition
   layout (event_date/event_hour) doubles as the retention + pruning unit
-  (D6).
+  (D6). Each micro-batch writes ONE file per hour partition it touches
+  (the rows are clustered on the partition keys before the write), so
+  the dashboard panels that read the sink open few files.
+- replayed records -> ``dedup_stream``: one stateful operator over one
+  scan of the source, keyed on the request id; id-less records are
+  keyed on their whole row, and late records of either kind are dropped
+  once the 24 h watermark has passed them.
 
-Scale: parse is a narrow map; the only stateful shuffle keys are
-(window, dimension) -- bounded state per the watermark. Shard-count
-parallelism (template.yaml:191) becomes source partitions -> tasks.
+Scale: parse is a narrow map; the stateful shuffle keys are (window,
+dimension) or the dedup key -- bounded state per the watermark.
+Shard-count parallelism (template.yaml:191) becomes source partitions ->
+tasks.
 """
 
 from __future__ import annotations
@@ -314,27 +321,60 @@ def hourly_bytes_stream(parsed: DataFrame, watermark: str = "24 hours") -> DataF
     )
 
 
+#: to_json options that make an id-less row's dedup key exact: the
+#: default timestamp format stops at milliseconds, so two records a few
+#: microseconds apart would share a key; rendering in UTC keeps the key
+#: independent of the session time zone across restarts
+_ROW_KEY_JSON_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "timeZone": "UTC",
+}
+
+
 def dedup_stream(parsed: DataFrame, watermark: str = "24 hours") -> DataFrame:
     """Streaming dedup on the request id (FIXTURES.md: ~1% duplicated):
-    ``dropDuplicatesWithinWatermark`` keeps state only within the watermark
-    horizon -- bounded memory at any scale.
+    ONE ``dropDuplicatesWithinWatermark`` over ONE scan of the source;
+    state lives only within the watermark horizon -- bounded memory at
+    any scale.
 
-    Rows whose request id parsed to NULL (the ``-`` sentinel / truncated
-    lines, D2) PASS THROUGH un-deduped: dropDuplicates treats NULL keys
-    as equal, so deduping them would collapse every distinct id-less
-    record within the horizon into one survivor (r8 review)."""
-    watermarked = parsed.withWatermark("timestamp", watermark)
-    with_id = watermarked.where(F.col("x_edge_request_id").isNotNull())
-    no_id = watermarked.where(F.col("x_edge_request_id").isNull())
-    return with_id.dropDuplicatesWithinWatermark(
-        ["x_edge_request_id"]
-    ).unionByName(no_id)
+    The key is ``(x_edge_request_id, row key)``. A row with an id has a
+    NULL row key, so rows collapse on the id alone. A row whose id parsed
+    to NULL (the ``-`` sentinel / truncated lines, D2) gets the NULL id
+    plus its whole row as JSON, so no id can take its key and only a row
+    equal to it in every column shares it: every distinct id-less record
+    survives, across micro-batches too, and an exact replay of one is
+    dropped like a replayed id. (dropDuplicates treats NULL keys as
+    equal; keying id-less rows on the id alone would keep one of them
+    per horizon.)
+
+    Behaviour changes against the earlier two-branch form, which
+    unioned a deduped id branch with an id-less passthrough and so
+    scanned and parsed the source twice per micro-batch:
+
+    - id-less rows older than the watermark are now dropped, as rows
+      with ids already were -- the module's 24 h lateness bound now
+      holds for every row;
+    - the query now reads its source once and its state key gained a
+      column, so a checkpoint written by the two-branch form cannot be
+      resumed by this query (Spark refuses it at start: the checkpoint
+      records two sources).
+    """
+    row_key = F.when(
+        F.col("x_edge_request_id").isNull(),
+        F.to_json(F.struct(*parsed.columns), _ROW_KEY_JSON_OPTIONS),
+    )
+    return (
+        parsed.withWatermark("timestamp", watermark)
+        .withColumn("__dedup_row_key", row_key)
+        .dropDuplicatesWithinWatermark(["x_edge_request_id", "__dedup_row_key"])
+        .drop("__dedup_row_key")
+    )
 
 
 def with_time_partitions(parsed: DataFrame) -> DataFrame:
     """Attach the D6 partition columns (event_date, event_hour) -- the
-    ONE spelling of the sink layout derivation, shared by the production
-    sink below and the throughput measurement tool.
+    ONE spelling of the sink layout derivation, used by the production
+    sink below.
 
     NULL timestamps map to the epoch partition (1970-01-01/0), NOT to
     Hive's __HIVE_DEFAULT_PARTITION__: the default partition escapes
@@ -359,8 +399,18 @@ def write_partitioned_parquet(
     Partitioning by (event_date, event_hour) gives Catalyst partition
     pruning for the time-range queries (README.md:109) and makes retention
     a partition drop (template.yaml:203-205 semantics).
+
+    The rows are repartitioned on the partition keys before the write, so
+    each micro-batch adds ONE file per hour partition it touches instead
+    of one per (task x hour): a backfill spanning many hours no longer
+    fans out into small files that every panel scan then opens.
+    Trade-off: a batch that falls inside one hour is written by one task.
+    Callers override the trigger on the returned writer (e.g.
+    ``.trigger(availableNow=True)`` to drain a backlog and stop).
     """
-    with_parts = with_time_partitions(parsed)
+    with_parts = with_time_partitions(parsed).repartition(
+        "event_date", "event_hour"
+    )
     return (
         with_parts.writeStream.format("parquet")
         .option("path", out_dir)

@@ -127,8 +127,18 @@ def test_field_shedding_never_drops_required_fields(tmp_path):
         assert k in rec
 
 
-def test_prior_round_times_skips_unparsed_rounds(tmp_path):
+def _pin_cores(monkeypatch, n_cpus, core_scale, clamp):
+    """Pin bench's host-sized constants: they are read from
+    SPARK_GRAFT_CPUS at import, so a test that encodes one core count
+    must not depend on the host it runs on."""
+    monkeypatch.setattr(bench, "N_CPUS", n_cpus)
+    monkeypatch.setattr(bench, "CORE_SCALE", core_scale)
+    monkeypatch.setattr(bench, "CALIBRATION_RATIO_CLAMP", clamp)
+
+
+def test_prior_round_times_skips_unparsed_rounds(tmp_path, monkeypatch):
     # a round whose parsed is null (r11) must not poison the drift baseline
+    _pin_cores(monkeypatch, 32, 1.0, (0.5, 2.0))
     (tmp_path / "BENCH_r98.json").write_text(json.dumps(
         {"parsed": None, "tail": "truncated..."}))
     (tmp_path / "BENCH_r99.json").write_text(json.dumps(
@@ -142,13 +152,16 @@ def test_prior_round_times_skips_unparsed_rounds(tmp_path):
     assert orig.exists()
 
 
-def test_prior_round_times_calibration_normalizes_priors(tmp_path):
+def test_prior_round_times_calibration_normalizes_priors(
+        tmp_path, monkeypatch):
     """r13 verdict #2: a kernel-carrying prior round's times scale by
     calib_now/calib_round (clamped) before the min -- on a 2x-slow day
     the gate's bar doubles instead of re-running 12/29 queries to
-    re-measure the box; rounds without a kernel stay raw."""
+    re-measure the box; rounds without a kernel stay raw (on the 32-core
+    host these priors were recorded on)."""
     import unittest.mock as mock
 
+    _pin_cores(monkeypatch, 32, 1.0, (0.5, 2.0))
     (tmp_path / "BENCH_r90.json").write_text(json.dumps(
         {"parsed": {"sf": 0.1, "queries": {"q": 1.5, "r": 4.0},
                     "calib_sec": 0.5}}))
@@ -165,6 +178,28 @@ def test_prior_round_times_calibration_normalizes_priors(tmp_path):
     assert slow == {"q": 2.0, "r": 8.0, "nocal": 3.0}
     hi = bench.CALIBRATION_RATIO_CLAMP[1]
     assert wild == {"q": 2.0, "r": 4.0 * hi, "nocal": 3.0}
+
+
+def test_prior_round_times_scales_32core_priors_on_4_cores(
+        tmp_path, monkeypatch):
+    """On a 4-core host a kernel-less prior that records no core count
+    is a 32-core round and scales by the core ratio 32/4 = 8; a prior
+    recorded at 4 cores stays raw; a kernel-carrying prior follows its
+    kernel ratio instead, clamped at 2 x CORE_SCALE = 16."""
+    import unittest.mock as mock
+
+    _pin_cores(monkeypatch, 4, 8.0, (0.5, 16.0))
+    (tmp_path / "BENCH_r97.json").write_text(json.dumps(
+        {"parsed": {"sf": 0.1, "queries": {"q": 1.5}}}))
+    (tmp_path / "BENCH_r98.json").write_text(json.dumps(
+        {"cpus": 4, "parsed": {"sf": 0.1, "queries": {"own": 0.7}}}))
+    (tmp_path / "BENCH_r99.json").write_text(json.dumps(
+        {"parsed": {"sf": 0.1, "queries": {"k": 1.0}, "calib_sec": 0.1}}))
+    with mock.patch.object(bench, "__file__", str(tmp_path / "bench.py")):
+        no_kernel = bench._prior_round_times(0.1)
+        wild = bench._prior_round_times(0.1, calib_now=5.0)
+    assert no_kernel == {"q": 12.0, "own": 0.7, "k": 8.0}
+    assert wild == {"q": 12.0, "own": 0.7, "k": 16.0}
 
 
 def test_calibration_kernel_times_fresh_dataframes(spark, monkeypatch):

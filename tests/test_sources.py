@@ -282,6 +282,30 @@ def test_load_table_pins_utc_on_cache_hit(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def test_register_views_pins_utc_on_memo_hit(spark, sf_dir):
+    """The view memo's HIT path must pin the UTC session timezone as
+    load_table does: a timezone change between two builds over the same
+    views would otherwise move every hour bucket off the oracle's."""
+    from aws_cloudfront_realtime_monitoring_spark.sources.tables import (
+        register_views,
+    )
+
+    def build():
+        register_views(spark, sf_dir)
+        return sorted(tuple(r) for r in spark.sql(
+            "SELECT hour(ts) AS h, COUNT(*) AS n FROM events GROUP BY 1"
+        ).collect())
+
+    first = build()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        second = build()  # memo hit: same sf_dir, same source stats
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert second == first
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def test_load_table_memo_invalidates_on_source_rewrite(spark, tmp_path):
     """r17 continuation: load_table memoizes the resolved relation per
     (session, dir, table, source stat) -- metadata only. A memo hit must

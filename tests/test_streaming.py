@@ -810,6 +810,145 @@ def test_dedup_stream_passes_null_request_ids_through(spark, replay_dir):
     assert len([r for r in ids if r[1] is None]) == 2
 
 
+def _write_wire_file(d: str, name: str, rows: list[dict], mtime: int) -> None:
+    """One replay file of ``to_wire_line`` rows (wire-name dicts) with a
+    pinned mtime: the file source replays in mtime order, so ascending
+    mtimes make replay order the test's batch order."""
+    from aws_cloudfront_realtime_monitoring_spark.sources.cf_logs import to_wire_line
+
+    path = os.path.join(d, name)
+    with open(path, "w") as f:
+        f.write("\n".join(to_wire_line(r) for r in rows) + "\n")
+    os.utime(path, (mtime, mtime))
+
+
+def _drain_to_memory(df, name: str):
+    """Drain a bounded stream into a memory table; returns (rows,
+    progress events)."""
+    q = run_to_memory_sink(df, name)
+    try:
+        return (df.sparkSession.sql(f"SELECT * FROM {name}").collect(),
+                q.recentProgress)
+    finally:
+        q.stop()
+
+
+def test_dedup_stream_scans_source_once(spark, replay_dir):
+    """dedup_stream is one stateful operator over one scan: the progress
+    events report exactly the lines written, not one read per branch."""
+    rows, progress = _drain_to_memory(
+        dedup_stream(stream_log_lines(spark, replay_dir)), "dedup_one_scan")
+    assert sum(p.numInputRows for p in progress) == 22  # lines written
+    assert len(rows) == 21  # the one replayed request id collapsed
+
+
+def test_dedup_stream_keeps_distinct_idless_rows_across_batches(
+        spark, replay_dir):
+    """Every distinct id-less row survives, across micro-batches and
+    down to a microsecond timestamp difference (the row key renders
+    timestamps at full precision); ids still collapse across batches,
+    and an exact replay of an id-less row is dropped like a replayed id."""
+    d = os.path.join(replay_dir, "idless")
+    os.makedirs(d)
+    ts = 1704100000
+    _write_wire_file(d, "b0.txt", [
+        {"timestamp": f"{ts}.000", "x-edge-request-id": "ID-1", "c-ip": "a"},
+        {"timestamp": f"{ts}.000", "c-ip": "n1"},
+        {"timestamp": f"{ts}.000", "c-ip": "n2"},
+        {"timestamp": f"{ts}.000001", "c-ip": "n2"},  # 1 us later: distinct
+        {"c-ip": "n3"},  # no timestamp either
+    ], 1_700_000_000)
+    _write_wire_file(d, "b1.txt", [
+        {"timestamp": f"{ts + 60}.000", "x-edge-request-id": "ID-1",
+         "c-ip": "b"},  # replayed id with other fields: collapses
+        {"timestamp": f"{ts + 60}.000", "c-ip": "n1"},  # new time: distinct
+        {"timestamp": f"{ts}.000", "c-ip": "n2"},  # exact replay: dropped
+        {"timestamp": f"{ts + 60}.000", "c-ip": "n4"},
+    ], 1_700_000_001)
+    rows, progress = _drain_to_memory(
+        dedup_stream(stream_log_lines(spark, d)), "dedup_idless")
+    assert len([p for p in progress if p.numInputRows]) == 2
+    got = sorted((r.c_ip, r.x_edge_request_id,
+                  r.timestamp and r.timestamp.isoformat()) for r in rows)
+    assert got == [
+        ("a", "ID-1", "2024-01-01T09:06:40"),
+        ("n1", None, "2024-01-01T09:06:40"),
+        ("n1", None, "2024-01-01T09:07:40"),
+        ("n2", None, "2024-01-01T09:06:40"),
+        ("n2", None, "2024-01-01T09:06:40.000001"),
+        ("n3", None, None),
+        ("n4", None, "2024-01-01T09:07:40"),
+    ]
+
+
+def test_dedup_stream_drops_late_idless_rows(spark, replay_dir):
+    """An id-less row older than the watermark is dropped once the
+    watermark has passed it, as a late row with an id is. The stateful
+    operator filters late rows against the watermark of the PREVIOUS
+    batch, so the late file is the fourth batch: b1 moves the event-time
+    maximum, b2 runs under the watermark it sets, b3 is filtered by it."""
+    d = os.path.join(replay_dir, "late")
+    os.makedirs(d)
+    ts = 1704100000
+    _write_wire_file(d, "b0.txt", [
+        {"timestamp": f"{ts}.000", "c-ip": "early"}], 1_700_000_000)
+    _write_wire_file(d, "b1.txt", [
+        {"timestamp": f"{ts + 200_000}.000", "c-ip": "ahead"}], 1_700_000_001)
+    _write_wire_file(d, "b2.txt", [
+        {"timestamp": f"{ts + 200_001}.000", "c-ip": "ahead2"}], 1_700_000_002)
+    _write_wire_file(d, "b3.txt", [
+        {"timestamp": f"{ts + 5}.000", "c-ip": "late"},
+        {"timestamp": f"{ts + 5}.000", "x-edge-request-id": "LATE-ID",
+         "c-ip": "late-id"},
+        {"timestamp": f"{ts + 200_002}.000", "c-ip": "on-time"},
+    ], 1_700_000_003)
+    rows, progress = _drain_to_memory(
+        dedup_stream(stream_log_lines(spark, d)), "dedup_late")
+    assert len([p for p in progress if p.numInputRows]) == 4
+    assert sorted(r.c_ip for r in rows) == [
+        "ahead", "ahead2", "early", "on-time"]
+
+
+def test_partitioned_sink_writes_one_file_per_hour_per_batch(
+        spark, replay_dir):
+    """Each micro-batch of write_partitioned_parquet adds at most one
+    file per (event_date, event_hour) it touched, however many input
+    splits the batch read: two files per batch, each spanning the same
+    three hours, would otherwise write one file per (split x hour)."""
+    import json
+
+    src = os.path.join(replay_dir, "hours")
+    os.makedirs(src)
+    ts = 1704100000
+    for f in range(4):
+        _write_wire_file(src, f"f{f}.txt", [
+            {"timestamp": f"{ts + h * 3600 + i}.000",
+             "x-edge-request-id": f"r{f}-{h}-{i}", "c-ip": "x"}
+            for h in range(3) for i in range(5)
+        ], 1_700_000_000 + f)
+    sink = os.path.join(replay_dir, "hours_sink")
+    q = write_partitioned_parquet(
+        stream_log_lines(spark, src, max_files_per_trigger=2), sink,
+        os.path.join(replay_dir, "hours_ckpt")).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.read.parquet(sink).count() == 60
+    log = os.path.join(sink, "_spark_metadata")
+    batches = sorted((n for n in os.listdir(log) if n.isdigit()), key=int)
+    assert len(batches) == 2
+    for b in batches:
+        with open(os.path.join(log, b)) as fh:
+            entries = [json.loads(x) for x in fh.read().splitlines()[1:]]
+        per_hour: dict[str, int] = {}
+        for e in entries:
+            part = os.path.dirname(e["path"])
+            per_hour[part] = per_hour.get(part, 0) + 1
+        assert len(per_hour) == 3, (b, per_hour)  # three hours touched
+        assert set(per_hour.values()) == {1}, (b, per_hour)
+
+
 def test_cut_chunks_rejects_stale_or_degenerate_chunk_size():
     """A checkpointed carry only satisfies pending < chunk_size for the
     size it was built with; a restart with a smaller chunk_size must

@@ -458,20 +458,31 @@ def test_bpe_tokens_agree_on_vertical_tab(spark):
     it), so a vertical tab made n_bpe_tokens diverge (r8 review)."""
     import duckdb
 
-    from aws_cloudfront_realtime_monitoring_spark.plans.text import BPE_RE
+    from aws_cloudfront_realtime_monitoring_spark.plans.text import (
+        BPE_RE,
+        BPE_RE_SPARK_SQL,
+    )
 
     from pyspark.sql import functions as F
 
     text = "a\x0bb c"
-    # the Column API, exactly as text_profile builds it (a spark.sql
-    # literal would C-escape the backslashes differently)
+    df = spark.createDataFrame([(text,)], "text STRING")
+    # the Column API takes the Java regex source as is
     spark_n = (
-        spark.createDataFrame([(text,)], "text STRING")
-        .select(F.size(F.regexp_extract_all("text", F.lit(BPE_RE), 0)).alias("n"))
+        df.select(F.size(F.regexp_extract_all("text", F.lit(BPE_RE), 0)).alias("n"))
         .first()
         .n
     )
+    # inside a spark.sql literal, as text_profile builds it, the parser
+    # unescapes once: the SQL spelling must unescape to BPE_RE exactly
+    df.createOrReplaceTempView("bpe_vt")
+    sql_re, sql_n = spark.sql(
+        f"SELECT '{BPE_RE_SPARK_SQL}' AS r, "
+        f"size(regexp_extract_all(text, '{BPE_RE_SPARK_SQL}', 0)) AS n "
+        "FROM bpe_vt"
+    ).first()
     duck_n = duckdb.sql(
         f"SELECT len(regexp_extract_all('{text}', '{BPE_RE}')) AS n"
     ).fetchone()[0]
-    assert spark_n == duck_n == 3  # 'a', 'b', 'c'; \x0B is whitespace
+    assert sql_re == BPE_RE
+    assert spark_n == sql_n == duck_n == 3  # 'a', 'b', 'c'; \x0B is whitespace

@@ -11,9 +11,10 @@ scales it" claim carries a number instead of an argument:
   by mtime; same-tick ties replay out of order -- measurement-hygiene
   memory), plus a 10x corpus from the scale-sweep events when present;
 - run the production path ``stream_log_lines`` (readStream text ->
-  parse_log_lines) into the exactly-once partitioned parquet sink
-  (write_partitioned_parquet's layout, availableNow trigger so the run
-  drains the backlog and terminates);
+  parse_log_lines) into the production exactly-once partitioned parquet
+  sink (``write_partitioned_parquet`` itself, its trigger overridden to
+  availableNow so the run drains the backlog and terminates), and into
+  flat parquet for the parse-limited rate;
 - report total records / wall seconds, min wall across ``--runs``
   (same min-of-N + load-gate discipline as bench.py).
 
@@ -78,47 +79,29 @@ def timed_drain(spark, replay_dir: str, work: str,
     """One full parse->parquet drain of the replay dir via the
     production availableNow path; returns (wall seconds, rows sunk).
 
-    ``partitioned=True`` is the production D6 layout (event_date /
-    event_hour) with the rows REPARTITIONED on the partition keys first
-    -- without that, every one of the 32 batch tasks opens a writer for
-    every touched (date, hour) and a toy-scale corpus spanning 720
-    partition-hours explodes into ~20k twenty-row files, measuring the
-    small-file problem instead of the pipeline (at production rates a
-    micro-batch spans ONE hour, so the real layout never hits this; the
-    repartition is the standard mitigation and keeps exactly-once).
-    ``partitioned=False`` sinks flat parquet: the parse-limited rate."""
-    from pyspark.sql import functions as F
-
-    from aws_cloudfront_realtime_monitoring_spark.streaming.ingest import stream_log_lines
+    ``partitioned=True`` runs the production sink,
+    ``write_partitioned_parquet``: the D6 layout (event_date /
+    event_hour), rows clustered on the partition keys so each batch
+    writes one file per hour it touches. ``partitioned=False`` sinks
+    flat parquet: the parse-limited rate."""
+    from aws_cloudfront_realtime_monitoring_spark.streaming.ingest import (
+        stream_log_lines,
+        write_partitioned_parquet,
+    )
 
     parsed = stream_log_lines(spark, replay_dir, max_files_per_trigger=None)
     out = os.path.join(work, "sink")
     ckpt = os.path.join(work, "ckpt")
     t0 = time.time()
     if partitioned:
-        from aws_cloudfront_realtime_monitoring_spark.streaming.ingest import (
-            with_time_partitions,
-        )
-
-        with_parts = with_time_partitions(parsed)
-        writer = (
-            with_parts.repartition(F.col("event_date"), F.col("event_hour"))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("event_date", "event_hour")
-        )
+        writer = write_partitioned_parquet(parsed, out, ckpt)
     else:
         writer = (
             parsed.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
         )
-    q = (
-        writer.trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
+    q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
     wall = time.time() - t0
     n_sunk = spark.read.parquet(out).count()
